@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 def local_df(spark: SparkSession, rows, schema) -> DataFrame:
     """``createDataFrame(rows, schema)`` as a single-slice relation."""
+    rows = list(rows)
     if not rows:
         # parallelize([], 1) yields an empty RDD whose schema inference
         # path differs; the plain form handles the empty case fine (no

@@ -1,9 +1,10 @@
 """EP1 — the reference's live contact-ETL path (SURVEY.md §3) as a
 parameterized Spark batch job.
 
+Per run, one aggregate over the audit log gives:
+  1. the cursor (A2)                                  → watermark read
+  2. today's batch number (A1), the next log id and the crash test
 Per micro-batch (reference contactpoint.controller.js:50-173):
-  1. resolve cursor from the audit log (A2)           → watermark read
-  2. assign today's batch number (A1)
   3. fetch the page (S1)                              → CursorSource
   4. open audit record (K5, status='running')
   5. recovery delete beyond watermark (X2/D2)
@@ -31,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_migrate_api_spark.functions.text import extract_phones
+from etl_migrate_api_spark.localdf import local_df
 from etl_migrate_api_spark.operators.classify import classify_batch
 from etl_migrate_api_spark.operators.merge import merge_fold_expr
 from etl_migrate_api_spark.sinks.tables import HashBucketedTable, ParquetTable
@@ -44,6 +46,16 @@ LOG_SCHEMA = (
 )
 
 STATE_SCHEMA = "hn_code string, slots array<string>, extras array<string>"
+
+
+@dataclass(frozen=True)
+class LogSummary:
+    """What a run needs from the audit log, read in one pass."""
+
+    last_successful_id: int = 0
+    next_batch_no: int = 1
+    next_log_id: int = 1
+    crashed_mid_batch: bool = False
 
 
 @dataclass
@@ -88,34 +100,60 @@ class ContactEtlJob:
         self.log = ParquetTable(spark, f"{base_dir}/migrate_log_customer")
 
     # ---- audit log (K5/K6/A1/A2) ----------------------------------------
-    def last_successful_id(self) -> int:
-        """A2: latest successful watermark (max_by over the log)."""
+    def _log_summary(self) -> LogSummary:
+        """One conditional aggregate over the audit log, read with its
+        schema given so no schema-inference job runs:
+
+        - A2 watermark: ``last_id`` of the latest ``success`` row;
+        - A1 batch number: COALESCE(MAX(batch_no), 0) + 1 over today's
+          rows;
+        - next log id: MAX(id) + 1 over every row;
+        - crash test: the latest REAL id (``dry_*`` rows excluded) has
+          only ``running`` rows, i.e. a batch opened and never
+          finalized. dry_* rows are excluded because a dry run after a
+          crash appends rows under a newer id, and letting them shadow
+          the unfinalized real batch would skip the sink+state repair."""
         if not self.log.exists():
-            return 0
+            return LogSummary()
+        status = F.col("status")
+        real = ~status.startswith("dry_")
+        today = F.to_date("started_at") == F.current_date()
         row = (
-            self.log.read()
-            .where(F.col("status") == "success")
-            .agg(F.max_by("last_id", "id").alias("last_id"))
+            self.spark.read.schema(LOG_SCHEMA)
+            .parquet(self.log.path)
+            .agg(
+                F.max_by("last_id", F.when(status == "success", F.col("id"))).alias("wm"),
+                F.max(F.when(today, F.col("batch_no"))).alias("batch_no"),
+                F.max("id").alias("max_id"),
+                F.max(F.when(real, F.col("id"))).alias("real_id"),
+                F.max(F.when(real & (status != "running"), F.col("id"))).alias("closed_id"),
+            )
             .collect()[0]
         )
-        return int(row["last_id"] or 0)
+        real_id, closed_id = row["real_id"], row["closed_id"]
+        return LogSummary(
+            last_successful_id=int(row["wm"] or 0),
+            next_batch_no=int(row["batch_no"] or 0) + 1,
+            next_log_id=int(row["max_id"] or 0) + 1,
+            crashed_mid_batch=real_id is not None and (closed_id is None or closed_id < real_id),
+        )
+
+    def last_successful_id(self) -> int:
+        """A2: latest successful watermark (max_by over the log)."""
+        return self._log_summary().last_successful_id
 
     def next_batch_no(self) -> int:
         """A1: COALESCE(MAX(batch_no),0)+1 for today."""
-        if not self.log.exists():
-            return 1
-        row = (
-            self.log.read()
-            .where(F.to_date("started_at") == F.current_date())
-            .agg((F.coalesce(F.max("batch_no"), F.lit(0)) + 1).alias("n"))
-            .collect()[0]
-        )
-        return int(row["n"])
+        return self._log_summary().next_batch_no
 
     def _next_log_id(self) -> int:
-        if self.log.exists():
-            return int(self.log.read().agg(F.max("id")).collect()[0][0] or 0) + 1
-        return 1
+        return self._log_summary().next_log_id
+
+    def _crashed_mid_batch(self) -> bool:
+        """True when the latest REAL log record opened a batch
+        ('running') that never finalized — a crash landed between the
+        data writes and the success row."""
+        return self._log_summary().crashed_mid_batch
 
     def _append_log(self, **kw) -> None:
         # X6: the dry run keeps its audit trail but NEVER under the real
@@ -140,10 +178,14 @@ class ContactEtlJob:
             "started_at": kw.get("started_at"),
             "finished_at": kw.get("finished_at"),
         }
-        self.log.append(self.spark.createDataFrame([row], schema=LOG_SCHEMA))
+        self.log.append(local_df(self.spark, [row], LOG_SCHEMA))
 
     # ---- one micro-batch -------------------------------------------------
-    def process_batch(self, batch: DataFrame, last_id: int, batch_no: int) -> JobResult:
+    def process_batch(
+        self, batch: DataFrame, last_id: int, batch_no: int, *, new_last: int, log_id: int
+    ) -> JobResult:
+        """One page: ``new_last`` is the page's cursor (its max id, known
+        on the driver) and ``log_id`` the audit id this batch opens."""
         import datetime as dt
 
         res = JobResult(batches=1)
@@ -152,7 +194,6 @@ class ContactEtlJob:
         # mis-bucket "today" for the A1 daily batch numbering on
         # non-UTC hosts
         started = dt.datetime.now(dt.timezone.utc)
-        log_id = self._next_log_id()
         self._append_log(
             id=log_id, continue_id=last_id, batch_no=batch_no, status="running",
             started_at=started,
@@ -186,7 +227,6 @@ class ContactEtlJob:
 
             t0 = time.perf_counter()
             merged = merge_fold_expr(prepared, state=state_df, legacy_slots=True)
-            new_last = int(batch.agg(F.max("id")).collect()[0][0])
             timings["mergeFold"] = time.perf_counter() - t0
 
             if not self.dry_run:
@@ -204,15 +244,23 @@ class ContactEtlJob:
                     .join(merged.drop("slots", "extras"), "hn_code")
                     .withColumn("rectype", F.lit("BIGDATA"))
                 )
-                upsert_by_key(self.sink, sink_rows, key="hn_code")
-                # state := state ⊕ merged (same commit cycle — no drift,
-                # K7/K8); bucket-pruned like the sink, so per-batch state
-                # write cost ∝ batch keys, not state size
-                upsert_by_key(
-                    self.state,
-                    merged.select("hn_code", "slots", "extras"),
-                    key="hn_code",
-                )
+                # the fold feeds both upserts: compute it once (the cache
+                # is matched by plan when a query runs, so sink_rows,
+                # built above, reads it too)
+                merged.persist()
+                try:
+                    upsert_by_key(self.sink, sink_rows, key="hn_code")
+                    # state := state ⊕ merged (same commit cycle — no
+                    # drift, K7/K8); bucket-pruned like the sink, so
+                    # per-batch state write cost ∝ batch keys, not state
+                    # size
+                    upsert_by_key(
+                        self.state,
+                        merged.select("hn_code", "slots", "extras"),
+                        key="hn_code",
+                    )
+                finally:
+                    merged.unpersist()
                 timings["writeSink"] = time.perf_counter() - t0
 
             res.last_id = new_last
@@ -252,30 +300,11 @@ class ContactEtlJob:
         self.state.replace(state)
         return self.state.read().count()
 
-    def _crashed_mid_batch(self) -> bool:
-        """True when the latest REAL log record opened a batch
-        ('running') that never finalized — a crash landed between the
-        data writes and the success row. dry_* rows are excluded before
-        taking the latest id: a dry run executed after the crash
-        appends rows under a newer id, and letting them shadow the
-        unfinalized real batch would skip the sink+state repair."""
-        if not self.log.exists():
-            return False
-        rows = (
-            self.log.read()
-            .where(~F.col("status").startswith("dry_"))
-            .groupBy("id")
-            .agg(F.collect_set("status").alias("st"))
-            .orderBy(F.col("id").desc())
-            .limit(1)
-            .collect()
-        )
-        return bool(rows) and rows[0]["st"] == ["running"]
-
     # ---- the loop (X1) ---------------------------------------------------
     def run(self, last_id: int | None = None, max_batches: int | None = None) -> JobResult:
-        cursor = self.last_successful_id() if last_id is None else last_id
-        if not self.dry_run and self._crashed_mid_batch():
+        log = self._log_summary()
+        cursor = log.last_successful_id if last_id is None else last_id
+        if not self.dry_run and log.crashed_mid_batch:
             # a crash AFTER the sink/state upserts but BEFORE the success
             # row leaves state holding the dead batch's keys while the
             # watermark points before them — the per-batch X2 delete
@@ -289,16 +318,19 @@ class ContactEtlJob:
                 bound=("recid", cursor),
             )
             self.rebuild_state()
-        batch_no = self.next_batch_no()
+        batch_no, log_id = log.next_batch_no, log.next_log_id
         total = JobResult(last_id=cursor)
         for batch_df, new_cursor in self.source.pages(cursor):
-            r = self.process_batch(batch_df, total.last_id, batch_no)
+            r = self.process_batch(
+                batch_df, total.last_id, batch_no, new_last=new_cursor, log_id=log_id
+            )
             total.batches += r.batches
             total.insert_count += r.insert_count
             total.update_count += r.update_count
             total.record_count += r.record_count
             total.last_id = new_cursor
             batch_no += 1
+            log_id += 1
             for k, v in r.step_durations.items():
                 total.step_durations[k] = total.step_durations.get(k, 0.0) + v
             if max_batches and total.batches >= max_batches:

@@ -326,9 +326,13 @@ class HashBucketedTable(ParquetTable):
     partition-pruned replace.
 
     Layout: ``path/_bucket=N/part-*.parquet`` where
-    ``_bucket = pmod(xxhash64(key), n_buckets)``. ``replace_buckets``
-    rewrites ONLY the bucket directories named — untouched buckets'
-    files are not read, not rewritten, not even listed by the write.
+    ``_bucket = pmod(xxhash64(key), n_buckets)``. Every write path
+    (``replace``, ``append``, ``replace_buckets``, ``compact``) shuffles
+    on the bucket column first, so each write leaves ONE file per bucket
+    it touches — a rewrite reads and writes one file per bucket instead
+    of one per writing task. ``replace_buckets`` rewrites ONLY the
+    bucket directories named — untouched buckets' files are not read,
+    not rewritten, not even listed by the write.
     At 100 TB, size ``n_buckets`` so a bucket ≈ a few GB (e.g. 4096);
     a micro-batch then rewrites ~|batch keys| buckets, not the table.
     On Delta/Iceberg the same call site becomes
@@ -400,9 +404,9 @@ class HashBucketedTable(ParquetTable):
         self._recover()  # same stranded-snapshot hazard as the base append
         if self.track_max:
             df = self._append_bump(df)
-        df.withColumn(self.BUCKET_COL, self.bucket_expr()).write.mode(
-            "append"
-        ).partitionBy(self.BUCKET_COL).parquet(self.path)
+        self._bucketed(df).write.mode("append").partitionBy(
+            self.BUCKET_COL
+        ).parquet(self.path)
 
     def read_buckets(self, buckets: list[int]) -> DataFrame:
         """Partition-pruned read: only the named bucket directories are
@@ -423,10 +427,18 @@ class HashBucketedTable(ParquetTable):
             for r in df.select(self.bucket_expr().alias("b")).distinct().collect()
         ]
 
+    def _bucketed(self, df: DataFrame) -> DataFrame:
+        """``df`` plus its bucket column, hash-partitioned on it: all of
+        a bucket's rows reach one write task, which writes them as one
+        file."""
+        return df.withColumn(self.BUCKET_COL, self.bucket_expr()).repartition(
+            self.BUCKET_COL
+        )
+
     def _write(self, df: DataFrame, path: str) -> None:
-        df.withColumn(self.BUCKET_COL, self.bucket_expr()).write.mode(
-            "overwrite"
-        ).partitionBy(self.BUCKET_COL).parquet(path)
+        self._bucketed(df).write.mode("overwrite").partitionBy(
+            self.BUCKET_COL
+        ).parquet(path)
         if self.track_max:
             self._write_bounds(path, _footer_max(path, self.track_max))
 

@@ -19,6 +19,8 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
+from etl_migrate_api_spark.localdf import local_df
+
 # fetch(last_id, limit) -> {"data": [row, ...], "count": int}
 FetchFn = Callable[[int, int], dict[str, Any]]
 
@@ -58,8 +60,11 @@ class CursorSource:
             if not isinstance(rows, list) or len(rows) == 0:
                 return
             # arrival order is the cursor order; make it explicit (O4:
-            # Spark has no implicit row order)
-            df = self.spark.createDataFrame(rows, schema=self.schema)
+            # Spark has no implicit row order). One slice: the page is
+            # re-read by every job of the batch, and each slice costs a
+            # Python worker round-trip per read. The row contract is
+            # createDataFrame's, checked when the page is first read.
+            df = local_df(self.spark, rows, self.schema)
             new_cursor = max(r[self.id_field] for r in rows)
             if new_cursor <= cursor:
                 # a server that ignores lastId (or a non-increasing id

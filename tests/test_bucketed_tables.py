@@ -35,11 +35,41 @@ def _bucket_files(path):
     return out
 
 
+def _files_per_bucket(path):
+    """{bucket_dir: number of parquet files in it}."""
+    return {b: sum(f.endswith(".parquet") for f in files) for b, files in _bucket_files(path).items()}
+
+
+def _assert_one_file_per_bucket(path, buckets=None):
+    counts = _files_per_bucket(path)
+    for b in counts if buckets is None else [f"_bucket={int(b)}" for b in buckets]:
+        assert counts[b] == 1, f"{b} holds {counts[b]} files"
+
+
 @pytest.fixture()
 def table(spark, tmp_path):
     t = HashBucketedTable(spark, str(tmp_path / "t"), key="hn_code", n_buckets=8)
     t.replace(_rows(spark, [(f"k{i}", i) for i in range(64)]))
     return t
+
+
+def test_replace_writes_one_file_per_bucket(spark, table):
+    """The fixture's 64 rows arrive in several slices; the write still
+    leaves one file in each of the 8 buckets."""
+    assert len(_files_per_bucket(table.path)) == 8
+    _assert_one_file_per_bucket(table.path)
+
+
+def test_append_writes_one_file_per_bucket(spark, table):
+    before = _bucket_files(table.path)
+    batch = _rows(spark, [(f"a{i}", i) for i in range(32)])
+    touched = set(f"_bucket={b}" for b in table.buckets_of(batch))
+    table.append(batch)
+    after = _bucket_files(table.path)
+    for bdir, files in after.items():
+        new = set(files) - set(before.get(bdir, {}))
+        assert len(new) == (bdir in touched), f"{bdir} gained {len(new)} files"
+    assert table.read().count() == 96
 
 
 def test_upsert_touches_only_batch_buckets(spark, table):
@@ -57,6 +87,34 @@ def test_upsert_touches_only_batch_buckets(spark, table):
     got = {r["hn_code"]: r["v"] for r in table.read().collect()}
     assert got["k3"] == 300 and got["k64"] == 640 and len(got) == 65
     assert got["k5"] == 5
+    # replace_buckets: the kept rows and the batch land as one file
+    _assert_one_file_per_bucket(table.path, table.buckets_of(batch))
+
+
+def test_upsert_into_multi_file_buckets(spark, tmp_path):
+    """A table written with a plain partitionBy (several files per
+    bucket) is still read whole by an upsert, and every bucket it
+    rewrites ends with one file."""
+    t = HashBucketedTable(spark, str(tmp_path / "multi"), key="hn_code", n_buckets=8)
+    (
+        _rows(spark, [(f"k{i}", i) for i in range(64)])
+        .withColumn(t.BUCKET_COL, t.bucket_expr())
+        .repartition(4)
+        .write.partitionBy(t.BUCKET_COL)
+        .parquet(t.path)
+    )
+    assert max(_files_per_bucket(t.path).values()) > 1  # sanity
+    before = _bucket_files(t.path)
+    batch = _rows(spark, [(f"k{i}", -i) for i in range(0, 64, 5)] + [("new", 1)])
+    buckets = t.buckets_of(batch)
+    upsert_by_key(t, batch, key="hn_code")
+    want = {f"k{i}": (-i if i % 5 == 0 else i) for i in range(64)} | {"new": 1}
+    assert {r["hn_code"]: r["v"] for r in t.read().collect()} == want
+    _assert_one_file_per_bucket(t.path, buckets)
+    after = _bucket_files(t.path)
+    for bdir, files in before.items():
+        if int(bdir.split("=")[1]) not in buckets:
+            assert after[bdir] == files, f"{bdir} was rewritten"
 
 
 def test_upsert_matches_whole_table_semantics(spark, table, tmp_path):
@@ -163,6 +221,7 @@ def test_compact_bucketed_table(spark, table):
     n_files = table.compact()
     assert n_files > 8  # more files than buckets before compaction
     assert sorted(map(tuple, table.read().collect())) == before_rows
+    _assert_one_file_per_bucket(table.path)
     # layout preserved: still bucket dirs, still prunable
     assert glob.glob(os.path.join(table.path, "_bucket=*", "*.parquet"))
     plan = table.read_buckets([0])._jdf.queryExecution().executedPlan().toString()

@@ -240,3 +240,138 @@ def test_dry_run_cannot_shadow_crashed_batch(spark, tmp_path):
     assert (
         rerun.state.read().where(F.col("hn_code") == "ZZ_POISON").count() == 0
     )
+
+
+# ---- the single audit-log pass -----------------------------------------
+
+
+def _separate_reads(job):
+    """The four audit-log reads as separate queries: the reference the
+    one-pass aggregate must agree with."""
+    if not job.log.exists():
+        return (0, 1, 1, False)
+    log = job.log.read()
+    wm = log.where(F.col("status") == "success").agg(F.max_by("last_id", "id")).collect()[0][0]
+    batch_no = (
+        log.where(F.to_date("started_at") == F.current_date())
+        .agg(F.coalesce(F.max("batch_no"), F.lit(0)) + 1)
+        .collect()[0][0]
+    )
+    next_id = int(log.agg(F.max("id")).collect()[0][0] or 0) + 1
+    latest = (
+        log.where(~F.col("status").startswith("dry_"))
+        .groupBy("id")
+        .agg(F.collect_set("status").alias("st"))
+        .orderBy(F.col("id").desc())
+        .limit(1)
+        .collect()
+    )
+    crashed = bool(latest) and latest[0]["st"] == ["running"]
+    return (int(wm or 0), int(batch_no), next_id, crashed)
+
+
+def _log_rows(job, spec, day_offset=0):
+    """Append audit rows ``(id, status, batch_no, last_id)``."""
+    import datetime as dt
+
+    from etl_migrate_api_spark.pipelines.contact_job import LOG_SCHEMA
+
+    at = dt.datetime.now(dt.timezone.utc) + dt.timedelta(days=day_offset)
+    rows = [
+        {"id": i, "batch_no": b, "last_id": last, "status": st, "started_at": at}
+        for i, st, b, last in spec
+    ]
+    job.log.append(job.spark.createDataFrame(rows, LOG_SCHEMA))
+
+
+LOG_CASES = {
+    # (rows, day offset) -> (watermark, batch_no, next log id, crashed)
+    "no_log": ([], 0, (0, 1, 1, False)),
+    "empty_log": ([], 0, (0, 1, 1, False)),
+    "only_dry_rows": (
+        [(1, "dry_running", 1, None), (1, "dry_success", 1, 40), (2, "dry_running", 2, None)],
+        0,
+        (0, 3, 3, False),
+    ),
+    "running_closed_by_error": (
+        [(1, "running", 1, None), (1, "success", 1, 10), (2, "running", 2, None), (2, "error", 2, None)],
+        0,
+        (10, 3, 3, False),
+    ),
+    "running_only_then_newer_finalized": (
+        [(1, "running", 1, None), (2, "running", 2, None), (2, "success", 2, 20)],
+        0,
+        (20, 3, 3, False),
+    ),
+    "running_only_latest": (
+        [(1, "running", 1, None), (1, "success", 1, 10), (2, "running", 2, None)],
+        0,
+        (10, 3, 3, True),
+    ),
+    "earlier_day": (
+        [(4, "running", 7, None), (4, "success", 7, 30)],
+        -1,
+        (30, 1, 5, False),
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(LOG_CASES))
+def test_log_summary_matches_separate_reads(job, case):
+    from etl_migrate_api_spark.pipelines.contact_job import LOG_SCHEMA
+
+    spec, day_offset, want = LOG_CASES[case]
+    if case == "empty_log":
+        job.log.append(job.spark.createDataFrame([], LOG_SCHEMA))
+        assert job.log.exists()
+    elif spec:
+        _log_rows(job, spec, day_offset)
+    s = job._log_summary()
+    got = (s.last_successful_id, s.next_batch_no, s.next_log_id, s.crashed_mid_batch)
+    assert got == want
+    assert got == _separate_reads(job)
+    # the four named reads stay callable and agree
+    assert (
+        job.last_successful_id(), job.next_batch_no(), job._next_log_id(), job._crashed_mid_batch()
+    ) == want
+
+
+def test_run_numbers_batches_and_log_ids_from_one_read(job):
+    res = job.run()
+    assert res.batches == 2
+    log = sorted((r["id"], r["batch_no"], r["status"], r["last_id"]) for r in job.log.read().collect())
+    assert log == [
+        (1, 1, "running", None), (1, 1, "success", 4),
+        (2, 2, "running", None), (2, 2, "success", 6),
+    ]
+
+
+# ---- the page row contract ---------------------------------------------
+
+
+@pytest.mark.parametrize("bad_id", [1.5, 2.0, True], ids=["float", "integral_float", "bool"])
+def test_non_integer_page_id_fails_before_any_write(spark, tmp_path, bad_id):
+    page = [
+        {"id": 1, "hn_code": "N1", "firstname": "a", "tel_no": "11"},
+        {"id": bad_id, "hn_code": "N2", "firstname": "b", "tel_no": "22"},
+    ]
+    job = ContactEtlJob(
+        spark, CursorSource(spark, make_fetch([page]), schema=BATCH_SCHEMA), str(tmp_path)
+    )
+    with pytest.raises(Exception, match="LongType|bigint|FIELD_DATA_TYPE"):
+        job.run()
+    assert not job.sink.exists() and not job.state.exists()
+    log = job.log.read().collect()
+    assert {r["status"] for r in log} == {"running", "error"}
+    assert job.last_successful_id() == 0
+
+
+def test_integer_hn_code_lands_as_string(spark, tmp_path):
+    page = [{"id": 1, "hn_code": 5, "firstname": "a", "tel_no": "11"}]
+    job = ContactEtlJob(
+        spark, CursorSource(spark, make_fetch([page]), schema=BATCH_SCHEMA), str(tmp_path)
+    )
+    res = job.run()
+    assert (res.insert_count, res.last_id) == (1, 1)
+    assert [r["hn_code"] for r in job.sink.read().collect()] == ["5"]
+    assert [r["hn_code"] for r in job.state.read().collect()] == ["5"]

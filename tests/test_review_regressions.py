@@ -192,3 +192,16 @@ def test_storm_probe_straddle_classification_is_phase_based():
     )
     assert len(straddles) == 12
     assert surfaced == ["action straddle did not converge"]
+
+
+def test_local_df_accepts_iterables(spark):
+    """An empty generator takes the empty path; a non-empty one keeps
+    its rows (a generator object is truthy, so the check must see a
+    list)."""
+    from etl_migrate_api_spark.localdf import local_df
+
+    empty = local_df(spark, (r for r in []), "k int")
+    assert empty.schema.simpleString() == "struct<k:int>"
+    assert empty.collect() == []
+    rows = local_df(spark, ((i,) for i in range(3)), "k int")
+    assert sorted(r["k"] for r in rows.collect()) == [0, 1, 2]
